@@ -5,7 +5,10 @@ Reference parity (see SURVEY.md §2.1-2.2, citations into /root/reference):
 
 - S1 ingest stamps server ``event_time`` (ms) and a globally monotonic
   ``order_id = epoch_ms*1000 + n`` with n in [0, 999]
-  (src/photon/streams.clj:288-308).
+  (src/photon/streams.clj:288-308). Like the reference's one server
+  process, a store has ONE writer: every append is stamped above the
+  previous max, so order_id order is also file-arrival order — the
+  property the streaming projection runner's resume filter relies on.
 - R1 cold replay = ordered scan with ``from``/``limit``
   (src/photon/streams.clj:340-366).
 - R4 point lookup by (stream_name, order_id) (src/photon/streams.clj:322).
@@ -25,7 +28,7 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -70,42 +73,8 @@ def coerce_order_bound(from_: int) -> int:
     return from_
 
 
-def _writer_start_slot(base_order_id: int, now_ms: int,
-                       writer_id: int, n_writers: int) -> tuple[int, int, int]:
-    """First free writer-slot for a batch: returns ``(start_slot, lo,
-    width)`` where writer ``writer_id`` owns counter positions
-    ``[lo, lo+width)`` of each ms and slot ``k`` encodes as
-    ``order_id = (k // width)*1000 + lo + (k % width)``.
-
-    The sub-ranges partition the per-ms 0..999 counter space, so ids from
-    different writers are disjoint BY CONSTRUCTION — uniqueness never
-    depends on a writer observing the others' high-water marks, which is
-    what makes concurrent ingest safe under the reference's encoding
-    ceiling (streams.clj:298-301). ``start_slot`` is the smallest own
-    slot that is both > ``base_order_id`` and not before the wall
-    clock's first slot of ``now_ms``."""
-    if not (1 <= n_writers <= 1000):
-        raise ValueError("n_writers must be in [1, 1000]")
-    if not (0 <= writer_id < n_writers):
-        raise ValueError(f"writer_id {writer_id} out of range "
-                         f"[0, {n_writers})")
-    width = 1000 // n_writers
-    lo = writer_id * width
-    t = base_order_id + 1          # minimum permitted order_id
-    ms_b, off = divmod(t, 1000)
-    if off <= lo:
-        after_base = ms_b * width
-    elif off > lo + width - 1:
-        after_base = (ms_b + 1) * width
-    else:
-        after_base = ms_b * width + (off - lo)
-    return max(after_base, now_ms * width), lo, width
-
-
-def stamp_events(df: DataFrame, base_order_id: int = 0,
-                 partition_offsets: dict[int, int] | None = None,
-                 now_ms: int | None = None, writer_id: int = 0,
-                 n_writers: int = 1) -> DataFrame:
+def stamp_events(df: DataFrame, base_order_id: int,
+                 partition_offsets: dict[int, int], now_ms: int) -> DataFrame:
     """Assign ``event_time`` + monotonic unique ``order_id`` to a batch.
 
     order_id = unix_millis(event_time) * 1000 + (per-ms counter mod 1000),
@@ -113,27 +82,17 @@ def stamp_events(df: DataFrame, base_order_id: int = 0,
     at 1000 events/ms of server clock. For batches denser than that we spill
     the counter forward into later-ms slots (monotonicity and uniqueness are
     preserved; the ms prefix then slightly leads the wall clock, which the
-    reference accepts too — its counter wraps within one ms).
+    reference accepts too — its counter wraps within one ms). Both cases are
+    one rule: ``order_id = max(base_order_id + 1, now_ms*1000) + seq``.
 
     ``base_order_id``: max order_id already in the table, so appended batches
     stay globally monotonic across micro-batches (driver-side bookkeeping in
     the streaming ingest path, SURVEY.md §4 custom-work #2).
 
-    ``writer_id``/``n_writers``: concurrent-ingest support. Each writer
-    owns a ``1000 // n_writers``-wide sub-range of the per-ms counter
-    (see :func:`_writer_start_slot`), so two writers appending to the
-    same store can never collide even when their views of the table max
-    are stale; each writer's own ids stay monotonic. The default (one
-    writer owning the whole 0..999 range) reproduces the single-writer
-    formula bit-for-bit.
-
-    Sequence assignment: with ``partition_offsets`` (cumulative row offsets
-    per input partition id, as :meth:`EventStore.ingest` computes from one
-    counting pass over the cached batch) the global sequence is
-    per-partition row_number + offset — fully parallel, the scale path. A
-    global dense sequence fundamentally needs that one counting pass;
-    without offsets we fall back to a single-partition window (fine for
-    small ad-hoc batches only).
+    Sequence assignment: ``partition_offsets`` (cumulative row offsets per
+    input partition id, as :meth:`EventStore.ingest` computes from one
+    counting pass over the cached batch) make the global sequence
+    per-partition row number + offset — fully parallel, no window.
     """
     # One driver-evaluated server timestamp per batch (photon stamps the
     # server clock too, streams.clj:296). A LITERAL rather than
@@ -141,32 +100,17 @@ def stamp_events(df: DataFrame, base_order_id: int = 0,
     # (batch, base, now_ms): re-evaluating the plan can never produce
     # different order_ids, which is what lets ingest() maintain the max-
     # order_id high-water mark arithmetically instead of rescanning.
-    if now_ms is None:
-        now_ms = int(time.time() * 1000)
     df = df.withColumn("event_time", F.timestamp_millis(F.lit(now_ms)))
-    if partition_offsets is not None:
-        # monotonically_increasing_id = (partitionId << 33) | row-in-
-        # partition with consecutive row numbers, so the global sequence is
-        # pure projection arithmetic: partition offset + low 33 bits. No
-        # window, no sort, no shuffle — the stamp stays map-side.
-        off = F.create_map(*[F.lit(x) for pid in sorted(partition_offsets)
-                             for x in (pid, partition_offsets[pid])])
-        mono = F.monotonically_increasing_id()
-        seq = off[F.spark_partition_id()] \
-            + mono.bitwiseAND(F.lit((1 << 33) - 1))
-    else:
-        w = Window.orderBy(F.monotonically_increasing_id())
-        seq = F.row_number().over(w).cast("long") - F.lit(1)
-    start, lo, width = _writer_start_slot(base_order_id, now_ms,
-                                          writer_id, n_writers)
-    # integer `div`, not `/`: slots reach ~1.8e15 (ms × width), where
-    # double-division floor can misround near exact multiples
-    df = (df.withColumn("_slot", F.lit(start).cast("long") + seq)
-            .withColumn(
-                "order_id",
-                F.expr(f"(_slot div {width}) * 1000L + {lo} "
-                       f"+ _slot % {width}").cast("long"))
-            .drop("_slot"))
+    # monotonically_increasing_id = (partitionId << 33) | row-in-partition
+    # with consecutive row numbers, so the global sequence is pure
+    # projection arithmetic: partition offset + low 33 bits. No window, no
+    # sort, no shuffle — the stamp stays map-side.
+    off = F.create_map(*[F.lit(x) for pid in sorted(partition_offsets)
+                         for x in (pid, partition_offsets[pid])])
+    seq = off[F.spark_partition_id()] \
+        + F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1))
+    start = max(base_order_id + 1, now_ms * 1000)
+    df = df.withColumn("order_id", F.lit(start).cast("long") + seq)
     return df.select(*[F.col(c) for c in _CLIENT_FIELDS], "event_time", "order_id")
 
 
@@ -186,11 +130,6 @@ class EventStore:
     """
 
     FORMATS = ("parquet", "orc", "json", "csv")
-    #: durable store-level record that multi-writer ingest has touched
-    #: this path (underscore prefix keeps it invisible to Spark's file
-    #: listing); once present, order_id-ordered file arrival can no
-    #: longer be assumed by anyone, whatever handle they opened
-    _MULTI_WRITER_MARKER = "_multi_writer"
     _EXT = {"parquet": ".parquet", "orc": ".orc", "json": ".json",
             "csv": ".csv"}
     #: explicit µs-precision timestamp pattern so the JSON backend
@@ -202,66 +141,21 @@ class EventStore:
     _CSV_NULL = "\\N"
 
     def __init__(self, spark: SparkSession, path: str,
-                 fmt: str = "parquet", writer_id: int = 0,
-                 n_writers: int = 1):
+                 fmt: str = "parquet"):
         if fmt not in self.FORMATS:
             raise ValueError(f"unsupported backend format {fmt!r}; "
                              f"one of {self.FORMATS}")
         self.spark = spark
         self.path = path
         self.fmt = fmt
-        #: concurrent-ingest identity: this handle stamps order_ids only
-        #: inside its own 1000//n_writers-wide sub-range of the per-ms
-        #: counter (see stamp_events), so N handles with distinct
-        #: writer_ids can append to one store without coordination and
-        #: never collide — the reference's single-process design ceiling
-        #: (streams.clj:298-301) lifted to multi-writer. CAVEAT: ids are
-        #: collision-free but files land in WALL-CLOCK interleave, not
-        #: order_id order, so StreamingProjectionRunner (whose resume
-        #: filter assumes order_id-ordered arrival) refuses stores that
-        #: EVER ingested multi-writer — a durable ``_multi_writer``
-        #: marker records the fact on the store itself, so opening a
-        #: fresh default single-writer handle cannot bypass the guard.
-        if not (1 <= n_writers <= 1000):
-            raise ValueError("n_writers must be in [1, 1000]")
-        if not (0 <= writer_id < n_writers):
-            raise ValueError(f"writer_id {writer_id} out of range "
-                             f"[0, {n_writers})")
-        self.writer_id = writer_id
-        self.n_writers = n_writers
         #: A9 global incoming counter (since construction, mirroring
         #: photon's since-boot atom, streams.clj:290-303).
         self.ingested = 0
         #: max-order_id high-water mark: scanned lazily once, then
         #: maintained arithmetically per ingest (stamping is deterministic,
         #: see stamp_events) and invalidated by the delete/maintenance
-        #: paths. With n_writers > 1 this tracks THIS writer's high-water
-        #: (concurrent appends by other writers are invisible to it) —
-        #: safe, because sub-range disjointness makes uniqueness
-        #: independent of cache freshness; only own-monotonicity needs
-        #: the own mark.
+        #: paths.
         self._max_oid: int | None = None
-
-    def ever_multi_writer(self) -> bool:
-        """True if ANY handle ever ingested into this store with
-        n_writers > 1 — the durable fact a consumer that depends on
-        order_id-ordered file arrival must check (this handle's own
-        n_writers says nothing about history)."""
-        return (self.n_writers > 1
-                or os.path.exists(os.path.join(
-                    self.path, self._MULTI_WRITER_MARKER)))
-
-    def _mark_multi_writer(self) -> None:
-        """Stamp the durable marker on FIRST multi-writer ingest (not at
-        construction — a read-only probe handle must not poison the
-        store or create its directory as a side effect)."""
-        os.makedirs(self.path, exist_ok=True)
-        marker = os.path.join(self.path, self._MULTI_WRITER_MARKER)
-        if not os.path.exists(marker):
-            tmp = marker + f".tmp{self.writer_id}"
-            with open(tmp, "w") as f:
-                f.write(str(self.n_writers))
-            os.replace(tmp, marker)
 
     def _write_opts(self, writer):
         if self.fmt in ("json", "csv"):
@@ -370,18 +264,16 @@ class EventStore:
         small-file replace — the object-store PUT primitive."""
         os.makedirs(self.path, exist_ok=True)
         gf = os.path.join(self.path, self._GEN_FILE)
-        tmp = gf + f".tmp{self.writer_id}"
+        tmp = gf + ".tmp0"
         with open(tmp, "w") as f:
             f.write(name or "0")
         os.replace(tmp, gf)
 
     def _gc_generation(self, name: str) -> None:
         """Best-effort delete of a superseded generation (by directory
-        name; ``""`` sweeps the root files). Root-level markers
-        (``_multi_writer``, ``_generation``) and live ``gen=`` dirs
-        survive a generation-0 sweep — which also fixes the old rename
-        protocol silently erasing the multi-writer marker on every
-        rewrite."""
+        name; ``""`` sweeps the root files). Root-level control files
+        (``_generation``) and live ``gen=`` dirs survive a generation-0
+        sweep."""
         import shutil
         if not name:
             if not os.path.isdir(self.path):
@@ -443,14 +335,9 @@ class EventStore:
                 # (empty create_map() has no key type). Reachable via a
                 # dedupe pass that drops an entire replayed batch.
                 return 0
-            if self.n_writers > 1:
-                self._mark_multi_writer()
             base = self.max_order_id()
             now_ms = int(time.time() * 1000)
-            stamped = stamp_events(src, base, partition_offsets=offsets,
-                                   now_ms=now_ms,
-                                   writer_id=self.writer_id,
-                                   n_writers=self.n_writers)
+            stamped = stamp_events(src, base, offsets, now_ms)
             # sort includes the partition column: the dynamic-partition
             # writer re-sorts any task holding >1 stream by partition col
             # (unstably), which would silently break the per-file order_id
@@ -465,14 +352,9 @@ class EventStore:
              .save(self._data_dir()))
         finally:
             src.unpersist()
-        if n:
-            # stamp_events assigns slots start..start+n-1 of this writer's
-            # sub-range, so the batch max is closed-form — the high-water
-            # mark advances without a rescan.
-            start, lo, width = _writer_start_slot(
-                base, now_ms, self.writer_id, self.n_writers)
-            last = start + n - 1
-            self._max_oid = (last // width) * 1000 + lo + last % width
+        # stamp_events assigns ids start..start+n-1, so the batch max is
+        # closed-form — the high-water mark advances without a rescan.
+        self._max_oid = max(base + 1, now_ms * 1000) + n - 1
         self.ingested += n
         return n
 
@@ -577,8 +459,7 @@ class EventStore:
     def clean(self) -> None:
         """D3 delete-all (streams.clj:324): swap the pointer to a fresh
         empty generation, then sweep the old one — same rename-free
-        commit as :meth:`_rewrite`. Root markers (e.g. the durable
-        multi-writer fact) survive, as "ever" semantics require."""
+        commit as :meth:`_rewrite`."""
         if not os.path.isdir(self.path):
             return
         old_ord, old_name = self._gen_pointer()

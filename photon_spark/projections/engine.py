@@ -70,12 +70,6 @@ class NativeReducer:
         "count_distinct": lambda c: F.count_distinct(F.expr(c)),
     }
 
-    def aggregate(self, df: DataFrame) -> Any:
-        if self.kind not in self._AGGS:
-            raise ValueError(f"unknown native reducer: {self.kind}")
-        row = df.agg(self._AGGS[self.kind](self.expr).alias("v")).first()
-        return row["v"]
-
 
 @dataclass
 class AssociativeReducer:
@@ -291,10 +285,18 @@ class ProjectionEngine:
                                 (prev * prev_w + bounds["v"] * new_w)
                                 / (prev_w + new_w))
                     proj.native_weight = prev_w + new_w
+                elif reducer.kind == "count_distinct" and proj.processed:
+                    # distinct counts do not add across batches: recount
+                    # the projection's stream up to the new high-water mark
+                    proj.current_value = (
+                        self.store.read_cold(proj.stream_name, ordered=False)
+                        .where(F.col("order_id") <= bounds["mx"])
+                        .agg(NativeReducer._AGGS["count_distinct"](
+                            reducer.expr))
+                        .first()[0])
                 else:
                     proj.current_value = _combine_native(
-                        reducer.kind, prev, bounds["v"],
-                        proj.processed, bounds["n"])
+                        reducer.kind, prev, bounds["v"], proj.processed)
                 proj.processed += bounds["n"]
                 proj.last_event = bounds["mx"]
                 proj.touch_global_time()
@@ -398,18 +400,11 @@ class ProjectionEngine:
                 yield pd.DataFrame({"lo": [lo], "mx": [mx], "n": [n],
                                     "blob": [pickle.dumps(state)]})
 
-        # Range-partition so each partition is a contiguous, sorted order_id
-        # span → partials merge left-to-right correctly. No order_id (the
-        # fold_dataframe ad-hoc contract): preserve the plan's own order in
-        # one partition, same fallback as _pack_ordered.
-        if "order_id" in df.columns:
-            df = (df.repartitionByRange("order_id")
-                    .sortWithinPartitions("order_id"))
-        else:
-            df = df.coalesce(1)
-        parts = (df.mapInPandas(fold_partition,
-                                schema="lo long, mx long, n long, blob binary")
-                   .collect())
+        # contiguous sorted order_id spans → partials merge left-to-right
+        parts = (_order_spans(df)
+                 .mapInPandas(fold_partition,
+                              schema="lo long, mx long, n long, blob binary")
+                 .collect())
         parts.sort(key=lambda r: r["lo"])
         state = (proj.current_value if proj.current_value is not None
                  else zero)
@@ -422,6 +417,17 @@ class ProjectionEngine:
         return proj
 
 
+def _order_spans(df: DataFrame) -> DataFrame:
+    """Range-partition on order_id so each partition is a contiguous,
+    sorted order_id span, in ascending partition order. Without an
+    order_id (the fold_dataframe ad-hoc contract) keep the plan's own
+    order in one partition."""
+    if "order_id" in df.columns:
+        return (df.repartitionByRange("order_id")
+                  .sortWithinPartitions("order_id"))
+    return df.coalesce(1)
+
+
 def _pack_ordered(df: DataFrame) -> DataFrame:
     """→ DataFrame[lo long, blob binary]: the input rows as pickled lists of
     plain-Python dicts, one blob per Arrow batch, ordered by first order_id.
@@ -432,12 +438,6 @@ def _pack_ordered(df: DataFrame) -> DataFrame:
     numpy scalars are converted executor-side so user reducers see plain
     ints/floats.
     """
-    if "order_id" in df.columns:
-        df = (df.repartitionByRange("order_id")
-                .sortWithinPartitions("order_id"))
-    else:  # no order key: preserve the plan's own order in one partition
-        df = df.coalesce(1)
-
     def pack(batches):
         import pandas as pd
         from pyspark import TaskContext
@@ -458,26 +458,21 @@ def _pack_ordered(df: DataFrame) -> DataFrame:
     # is tiny (one row per Arrow batch), so a round-robin shuffle into one
     # partition + in-partition sort reconstructs the total order with no
     # sampling pass and keeps toLocalIterator streaming in order.
-    return (df.mapInPandas(pack, schema="lo long, blob binary")
+    return (_order_spans(df).mapInPandas(pack, schema="lo long, blob binary")
               .repartition(1)
               .sortWithinPartitions("lo"))
 
 
-def _combine_native(kind: str, prev: Any, new: Any, prev_n: int, new_n: int) -> Any:
-    """Merge a fresh native-aggregate value into the running projection value
-    (incremental advance across batches)."""
+def _combine_native(kind: str, prev: Any, new: Any, prev_n: int) -> Any:
+    """Merge a fresh count/sum/min/max value into the running projection
+    value (incremental advance across batches); avg and count_distinct
+    merge in ``_fold_df``."""
     if prev is None or prev_n == 0:
         return new
     if new is None:
         return prev
     if kind in ("count", "sum"):
         return prev + new
-    if kind == "avg":  # pragma: no cover - handled NULL-aware in _fold_df
-        raise AssertionError("avg merges via proj.native_weight")
     if kind == "min":
         return min(prev, new)
-    if kind == "max":
-        return max(prev, new)
-    # count_distinct is not incrementally mergeable without state; recompute
-    # callers should re-advance from 0 (documented limitation).
-    return new
+    return max(prev, new)

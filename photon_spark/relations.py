@@ -284,10 +284,5 @@ def read_base(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
-    key = ("base", path, _stamp(path))
-    full = (_app_id(spark),) + key
-    df = _MEMO.get(full)
-    if df is None:
-        df = spark.read.parquet(path)
-        _memo_put(full, df)
-    return df
+    return plan_memo(spark, ("base", path, _stamp(path)),
+                     lambda: spark.read.parquet(path))

@@ -71,9 +71,8 @@ class CdcMergeTable:
 
     Multi-writer ingest: two producers with independent foreachBatch
     checkpoints both emit batch ids 0,1,2,… — colliding in one id space.
-    Pass ``writer_id``/``n_writers`` (the events-table sub-range design,
-    events.py:74-105) and ``apply_batch`` namespaces every id as
-    ``id * n_writers + writer_id``: writers own disjoint residue
+    Pass ``writer_id``/``n_writers`` and ``apply_batch`` namespaces
+    every id as ``id * n_writers + writer_id``: writers own disjoint residue
     classes, so neither can overwrite the other's partitions,
     ``state()`` merges both under the argmax, and compaction folds the
     union. ``state_at`` addresses the NAMESPACED id space — use

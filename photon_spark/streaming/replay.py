@@ -9,13 +9,11 @@ hot-cold natively — every already-present file is processed first, new
 files as they land, exactly-once via checkpoint. Hot-only = hot-cold with
 ``from`` = the current max order_id (subscription instant).
 
-Backpressure: ``maxFilesPerTrigger`` bounds micro-batch size — no silent
-drop-oldest (photon's sliding-buffer 1 drops events for slow hot
-subscribers, streams.clj:70-72; we deliberately do not reproduce that).
-It is OFF by default: splitting one ingest's files (hash-partitioned by
-stream) across triggers can interleave order_ids across micro-batches,
-which would break the ordered-fold guarantee of
-photon_spark.streaming.stateful — see that module's docstring.
+No silent drop-oldest: photon's sliding-buffer 1 drops events for slow
+hot subscribers (streams.clj:70-72); we deliberately do not reproduce
+that. Each trigger takes every new file, so micro-batches never
+interleave order_ids — the ordered-fold guarantee of
+photon_spark.streaming.stateful.
 """
 
 from __future__ import annotations
@@ -27,13 +25,10 @@ from photon_spark.events import coerce_order_bound, ALL_STREAMS, EventStore
 
 
 def read_hot_cold(store: EventStore, stream_name: str = ALL_STREAMS,
-                  from_: int = 0, max_files_per_trigger: int | None = None
-                  ) -> DataFrame:
+                  from_: int = 0) -> DataFrame:
     """R3: streaming DataFrame that replays all persisted events (from the
     ``from_`` bound) then keeps tailing new appends."""
     reader = store.spark.readStream.schema(store._disk_schema())
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     # same pluggable backend as the batch path (file source streams any
     # of the store formats; _decode restores the struct the flat CSV
     # backend carries as JSON)

@@ -16,14 +16,10 @@ Reference semantics (citations into /root/reference):
   events that arrived since.
 
 Ordering guarantee (the one real constraint): micro-batches must not
-interleave order_ids. That holds by construction for a single-writer store —
-``EventStore.ingest`` stamps each append strictly above the previous max
-order_id and the file source processes files in arrival order, taking *all*
-new files per trigger when ``maxFilesPerTrigger`` is unset (the default
-here). Setting ``maxFilesPerTrigger`` trades that guarantee for bounded
-micro-batches: one ingest's files are hash-partitioned by stream and may
-split across triggers out of order. Use it only for hot-only tails where
-each trigger's files come from distinct ingest calls.
+interleave order_ids. That holds by construction because an event store has
+one writer — ``EventStore.ingest`` stamps each append strictly above the
+previous max order_id — and the file source processes files in arrival
+order, taking *all* new files per trigger.
 
 Scale notes: the per-batch work is ``ProjectionEngine._fold_df`` — native
 reducers stay Catalyst aggregates (distributed, no Python), the PyReducer
@@ -54,33 +50,10 @@ class StreamingProjectionRunner:
     """
 
     def __init__(self, engine: ProjectionEngine, checkpoint_dir: str | None = None,
-                 max_files_per_trigger: int | None = None,
                  state_path: str | None = None):
-        # resume correctness depends on single-writer order_id monotony:
-        # _apply_batch filters `order_id > proj.last_event`, which is
-        # only exact when files arrive in order_id order. A multi-writer
-        # store interleaves writers' files in wall-clock order, so a
-        # later file can carry LOWER order_ids — those would be silently
-        # skipped. The check consults the store's durable _multi_writer
-        # marker (EventStore.ever_multi_writer), not just this handle's
-        # n_writers: opening a fresh default single-writer handle on a
-        # store that EVER ingested multi-writer must not bypass it.
-        store = getattr(engine, "store", None)
-        multi = (store.ever_multi_writer()
-                 if hasattr(store, "ever_multi_writer")
-                 else getattr(store, "n_writers", 1) > 1)
-        if multi:
-            raise ValueError(
-                "StreamingProjectionRunner requires a store that has "
-                "only ever seen single-writer ingest: the resume filter "
-                "order_id > last_event assumes files arrive in order_id "
-                "order, which multi-writer ingest does not guarantee — "
-                "this store carries the _multi_writer marker (or this "
-                "handle has n_writers > 1)")
         self.engine = engine
         self.checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(
             prefix="photon_spark_ckpt_")
-        self.max_files_per_trigger = max_files_per_trigger
         self.batches = 0
         #: virtual-stream capture: successive state snapshots per projection,
         #: one per micro-batch that touched it (streams.clj:182-200 — every
@@ -183,20 +156,6 @@ class StreamingProjectionRunner:
         """
         import json
 
-        # re-check the durable multi-writer marker EVERY batch, not just
-        # at construction: a second producer can open the store with
-        # n_writers > 1 while this runner is live, after which ordered
-        # arrival no longer holds — fail the stream loudly instead of
-        # silently skipping lower-order_id files
-        store = getattr(self.engine, "store", None)
-        if hasattr(store, "ever_multi_writer") and store.ever_multi_writer():
-            raise ValueError(
-                "StreamingProjectionRunner: the store gained the "
-                "_multi_writer marker mid-run — order_id-ordered file "
-                "arrival no longer holds, so resume filtering would "
-                "silently drop events; stop multi-writer ingest on this "
-                "store or rebuild projections from a cold replay")
-
         snaps = []
         batch_df = batch_df.persist()
         try:
@@ -225,10 +184,7 @@ class StreamingProjectionRunner:
 
     # ----------------------------------------------------------------- run
     def _stream_writer(self):
-        stream = read_hot_cold(
-            self.engine.store,
-            max_files_per_trigger=self.max_files_per_trigger)
-        return (stream.writeStream
+        return (read_hot_cold(self.engine.store).writeStream
                 .foreachBatch(self._apply_batch)
                 .option("checkpointLocation", self.checkpoint_dir)
                 .queryName("photon_spark_projections"))

@@ -266,53 +266,35 @@ def test_pluggable_backend_formats(spark, tmp_path):
         assert spark.sql(f"SELECT * FROM bk_{fmt}").first()["count"] == 16, fmt
 
 
-def test_multi_writer_ingest_no_collision(spark, tmp_path):
-    # Two uncoordinated writer handles on one store: writer-id sub-ranges
-    # of the per-ms counter keep order_ids globally unique and each
-    # writer's own sequence monotonic, even though neither handle ever
-    # sees the other's high-water mark (each caches only its own).
-    path = str(tmp_path / "events")
-    w0 = EventStore(spark, path, writer_id=0, n_writers=2)
-    w1 = EventStore(spark, path, writer_id=1, n_writers=2)
-    seen, per_writer = [], {0: [], 1: []}
-    for rnd in range(3):  # interleave: w0, w1, w0, w1, ...
-        for w, st in ((0, w0), (1, w1)):
-            n = st.ingest(make_events(spark, 7, stream=f"s{w}"))
-            assert n == 7
-            ids = [r["order_id"] for r in
-                   st.read_cold(f"s{w}").collect()]
-            per_writer[w] = sorted(ids)
-    all_ids = [r["order_id"] for r in w0.read_all().collect()]
-    assert len(all_ids) == 42
-    assert len(set(all_ids)) == 42  # no collisions across writers
-    # each id's counter position sits inside its writer's sub-range
-    for w in (0, 1):
-        assert all(w * 500 <= oid % 1000 < (w + 1) * 500
-                   for oid in per_writer[w]), per_writer[w]
-    # per-writer batches stayed monotonic: replay order == ingest order
-    for w, st in ((0, w0), (1, w1)):
-        replay = [r["local_id"] for r in
-                  st.read_cold(f"s{w}").orderBy("order_id").collect()]
-        assert replay == [f"local-{i}" for i in range(7)] * 3
-
-
-def test_multi_writer_dense_batch_spills_within_subrange(spark, tmp_path):
-    # A batch denser than the writer's per-ms slot width spills into the
-    # SAME writer's slots of later ms values — never into a neighbor's
-    # sub-range.
-    st = EventStore(spark, str(tmp_path / "ev"), writer_id=3, n_writers=4)
-    st.ingest(make_events(spark, 600))  # width is 250 slots/ms
+def test_dense_batch_gets_contiguous_ids_without_rescan(spark, tmp_path):
+    # A batch denser than the 1000 ids/ms encoding spills the counter into
+    # later ms values: the ids are start..start+n-1 with
+    # start = max(base + 1, now_ms*1000), and the high-water mark
+    # advances arithmetically, with no rescan of the table.
+    st = EventStore(spark, str(tmp_path / "ev"))
+    t0 = int(time.time() * 1000)
+    assert st.ingest(make_events(spark, 2500)) == 2500
+    t1 = int(time.time() * 1000)
     ids = sorted(r["order_id"] for r in st.read_all().collect())
-    assert len(set(ids)) == 600
-    assert all(750 <= oid % 1000 < 1000 for oid in ids)
-    assert ids[-1] == st.max_order_id()
+    start = ids[0]
+    # empty store (base 0): the clock term wins
+    assert start % 1000 == 0 and t0 <= start // 1000 <= t1
+    assert ids == list(range(start, start + 2500))
+    assert st.max_order_id() == ids[-1]
 
+    # a high-water mark ahead of the clock: the base term wins
+    base = ids[-1] + 60_000 * 1000 + 7
+    st._max_oid = base
 
-def test_writer_id_validation(spark, tmp_path):
-    with pytest.raises(ValueError, match="out of range"):
-        EventStore(spark, str(tmp_path / "x"), writer_id=2, n_writers=2)
-    with pytest.raises(ValueError, match="n_writers"):
-        EventStore(spark, str(tmp_path / "y"), n_writers=0)
+    def no_rescan():
+        raise AssertionError("ingest/max_order_id rescanned the table")
+
+    st.read_all = no_rescan
+    assert st.ingest(make_events(spark, 2500, stream="s2")) == 2500
+    assert st.max_order_id() == base + 2500
+    del st.read_all
+    ids2 = sorted(r["order_id"] for r in st.read_cold("s2").collect())
+    assert ids2 == list(range(base + 1, base + 2501))
 
 
 def test_csv_backend_provenance_and_null_payload_roundtrip(spark, tmp_path):
@@ -351,24 +333,19 @@ def test_csv_backend_provenance_and_null_payload_roundtrip(spark, tmp_path):
 def test_event_store_rename_free_rewrite_cycle(spark, tmp_path):
     """Object-store portability of the maintenance paths: a full
     delete-event → delete-stream → expire → compact → clean cycle never
-    calls os.rename; the only os.replace targets are the one-line
-    ``_generation`` pointer (the atomic-PUT analogue) and the
-    multi-writer marker. And the durable multi-writer marker SURVIVES
-    every rewrite — the old rename protocol silently erased it,
-    re-opening the ordered-resume guard it exists to hold closed."""
+    calls os.rename; the only os.replace target is the one-line
+    ``_generation`` pointer (the atomic-PUT analogue)."""
     import os
 
     import photon_spark.events as ev_mod
 
     path = str(tmp_path / "store")
-    store = ev_mod.EventStore(spark, path, n_writers=2, writer_id=0)
+    store = ev_mod.EventStore(spark, path)
     df = spark.createDataFrame(
         [("a", "t", str(i)) for i in range(6)]
         + [("b", "t", str(i)) for i in range(4)],
         "stream_name string, event_type string, local_id string")
     assert store.ingest(df) == 10
-    marker = os.path.join(path, store._MULTI_WRITER_MARKER)
-    assert os.path.exists(marker)
 
     replaced = []
     real_replace = os.replace
@@ -386,7 +363,6 @@ def test_event_store_rename_free_rewrite_cycle(spark, tmp_path):
         first_a = store.read_cold("a").first()["order_id"]
         store.delete_event("a", first_a)
         assert store.read_cold("a").count() == 5
-        assert os.path.exists(marker), "marker erased by delete_event"
         store.delete_stream("b")
         assert store.streams() == ["a"]
         cut = store.read_cold("a").collect()[2]["order_id"]
@@ -394,20 +370,14 @@ def test_event_store_rename_free_rewrite_cycle(spark, tmp_path):
         assert store.read_cold("a").count() == 3
         assert store.compact() == 1
         assert store.read_cold("a").count() == 3
-        assert os.path.exists(marker), "marker erased by maintenance"
         store.clean()
         assert store.read_all().count() == 0
-        assert os.path.exists(marker), "marker erased by clean"
         # a fresh ingest after clean starts writing into the live gen
         assert store.ingest(df.limit(3).repartition(1)) == 3
         assert store.read_all().count() == 3
     finally:
         ev_mod.os.rename, ev_mod.os.replace = orig
-    assert set(replaced) <= {"_generation",
-                             os.path.basename(marker)}, replaced
-    # the fresh single-writer probe handle still sees the durable fact
-    probe = ev_mod.EventStore(spark, path)
-    assert probe.ever_multi_writer()
+    assert set(replaced) == {"_generation"}, replaced
 
 
 def test_generation_pointer_is_nonce_unique_dir(spark, tmp_path):

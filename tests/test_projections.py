@@ -207,3 +207,37 @@ def test_fold_dataframe_associative_without_order_id(spark):
                            merge=lambda x, y: x + y, zero=0), df)
     assert proj.current_value == sum(range(10))
     assert proj.processed == 10
+
+
+def test_native_count_distinct_across_batches(spark, tmp_path):
+    """Distinct counts do not add across batches: the second fold must
+    count values already seen in the first one once — through both
+    ``advance`` and the streaming runner, which share the native fold."""
+    from photon_spark.streaming.stateful import StreamingProjectionRunner
+
+    store = EventStore(spark, str(tmp_path / "ev"))
+
+    def post(stream, ids):
+        store.ingest(spark.createDataFrame(
+            [(stream, str(i)) for i in ids],
+            "stream_name string, local_id string"))
+
+    batch, streamed = ProjectionEngine(store), ProjectionEngine(store)
+    for engine in (batch, streamed):
+        engine.register("ids", NativeReducer("count_distinct", "local_id"),
+                        stream_name="s")
+    runner = StreamingProjectionRunner(
+        streamed, checkpoint_dir=str(tmp_path / "ckpt"))
+
+    post("s", range(5))
+    post("other", range(100, 110))  # outside the projection's stream
+    assert batch.advance("ids").current_value == 5
+    runner.run(available_now=True)
+    assert streamed.value("ids") == 5
+
+    post("s", range(3, 6))
+    assert batch.advance("ids").current_value == 6
+    runner.run(available_now=True)
+    assert streamed.value("ids") == 6
+    assert batch.projection("ids").processed == 8
+    assert streamed.projection("ids").processed == 8

@@ -1411,46 +1411,6 @@ def test_cdc_fold_partition_append_merges_new_data(spark, sf_dir,
     ev.unpersist()
 
 
-def test_projection_runner_refuses_multi_writer_store(spark, tmp_path):
-    # the resume filter order_id > last_event assumes order_id-ordered
-    # file arrival; multi-writer ingest interleaves writers' files, so
-    # the combination must be refused, not silently lossy
-    import pytest as _pytest
-    path = os.path.join(str(tmp_path), "mw")
-    store = EventStore(spark, path, writer_id=1, n_writers=2)
-    engine = ProjectionEngine(store)
-    with _pytest.raises(ValueError, match="single-writer"):
-        StreamingProjectionRunner(engine)
-    # construction alone must NOT poison the store (read-only probes)
-    assert not os.path.exists(os.path.join(
-        path, EventStore._MULTI_WRITER_MARKER))
-
-    # after an actual multi-writer ingest the fact is durable on the
-    # STORE: a fresh default single-writer handle on the same path must
-    # not bypass the guard (the files are wall-clock interleaved
-    # whoever opens them)
-    _post(store, "s1", 3, start=0)
-    fresh = EventStore(spark, path)
-    assert fresh.n_writers == 1 and fresh.ever_multi_writer()
-    with _pytest.raises(ValueError, match="single-writer"):
-        StreamingProjectionRunner(ProjectionEngine(fresh))
-
-    # a store that never saw multi-writer ingest is unaffected
-    clean = EventStore(spark, os.path.join(str(tmp_path), "sw"))
-    assert not clean.ever_multi_writer()
-    runner = StreamingProjectionRunner(ProjectionEngine(clean))
-
-    # ... and the check repeats PER BATCH: a store that turns
-    # multi-writer while the runner is live fails the next fold loudly
-    # instead of silently dropping lower-order_id files
-    _post(clean, "s1", 3, start=0)
-    runner.run(available_now=True)
-    _post(EventStore(spark, clean.path, writer_id=1, n_writers=2),
-          "s1", 1, start=3)
-    with _pytest.raises(Exception, match="_multi_writer"):
-        runner.run(available_now=True)
-
-
 def test_cdc_multi_writer_gate_query_equals_single_writer(spark, sf_dir,
                                                           tmp_path):
     # The gated two-writer query must land on EXACTLY the state a lone
